@@ -17,13 +17,13 @@ metadata ``(w, h, fmt)`` (``BASELINE.json`` input_hint).  Codecs:
   IDCT, jpeg.py) — encode is 4:2:0 quality 90; decode handles any
   baseline (SOF0/1) or progressive (SOF2) file with sampling
   factors ≤ 2.
-- ``webp``: REAL lossless WebP / VP8L bitstream (vp8l.py, LZ77 +
-  prefix codes + transforms); lossy VP8 refused.
-- ``gif``: REAL GIF87a/89a bitstream (gif.py, LZW + palettes +
-  interlace); encode requires <= 256 distinct colors.
-- ``bmp``: REAL Windows DIB (bmp.py, palettized/16/24/32 bpp,
-  BITFIELDS masks, RLE8/RLE4).
-- ``ppm``: REAL Netpbm P1-P6 (netpbm.py).
+- ``bmp``: REAL Windows DIB (bmp.py) — encode is 24 bpp bottom-up;
+  decode handles palettized/16/24/32 bpp, BITFIELDS and RLE4/RLE8.
+
+``FORMATS`` and ``BITSTREAM_DECODERS`` (png, jpeg, bmp) are the one place
+that names the supported formats: ``decode_image`` and
+``multimodal.decode_external`` dispatch through the decoder table, and
+``export.export_xyz`` accepts exactly ``FORMATS``.
 
 All functions operate on whole numpy arrays and are called from Arrow
 batch UDFs only — never per row from Python.
@@ -36,7 +36,9 @@ import zlib
 
 import numpy as np
 
-__all__ = ["encode_image", "decode_image", "psnr", "CHANNELS"]
+from . import bmp, jpeg
+
+__all__ = ["encode_image", "decode_image", "psnr", "CHANNELS", "FORMATS", "BITSTREAM_DECODERS"]
 
 CHANNELS = 3
 _Q8_LEVELS = 63  # 6-bit: step 255/63 ≈ 4.05, max error ≈ 2.02 → WORST-CASE
@@ -307,6 +309,16 @@ def _png_decode_bytes(data: bytes) -> np.ndarray:
     return np.repeat(px, 3, axis=2)
 
 
+# Formats whose payload is a self-describing file: whole-file bytes →
+# (h, w, 3) uint8, shape taken from the file's own header.
+BITSTREAM_DECODERS = {"png": _png_decode_bytes, "jpeg": jpeg.decode, "bmp": bmp.decode}
+FORMATS = ("raw", "q8", "dct", *BITSTREAM_DECODERS)
+
+
+def _unknown_fmt(fmt: str) -> ValueError:
+    return ValueError(f"unknown fmt {fmt!r}; supported: {', '.join(FORMATS)}")
+
+
 def encode_image(arr: np.ndarray, fmt: str) -> bytes:
     """arr: (h, w, 3) uint8 → payload bytes."""
     if arr.dtype != np.uint8 or arr.ndim != 3 or arr.shape[2] != CHANNELS:
@@ -322,76 +334,26 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
     if fmt == "png":
         return _png_encode(arr)
     if fmt == "jpeg":
-        from . import jpeg
-
         return jpeg.encode(arr, quality=90, subsample=True)
-    if fmt == "webp":
-        from . import vp8l
-
-        return vp8l.encode(arr)
-    if fmt == "gif":
-        from . import gif
-
-        return gif.encode(arr)
     if fmt == "bmp":
-        from . import bmp
-
         return bmp.encode(arr)
-    if fmt == "ppm":
-        from . import netpbm
-
-        return netpbm.encode(arr)
-    raise ValueError(f"unknown fmt: {fmt}")
+    raise _unknown_fmt(fmt)
 
 
 def decode_image(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     """payload → (h, w, 3) uint8.  ``q8`` payloads are stored
     dequantized, so decode is a reshape for raw/q8; ``dct`` runs the
-    inverse transform; ``png`` parses the real bitstream."""
+    inverse transform; bitstream formats parse the real file and must
+    agree with the metadata shape."""
     if fmt == "dct":
         return _dct_decode(payload, w, h)
-    if fmt == "png":
-        arr = _png_decode_bytes(bytes(payload))
+    if fmt in BITSTREAM_DECODERS:
+        arr = BITSTREAM_DECODERS[fmt](bytes(payload))
         if arr.shape[:2] != (h, w):
-            raise ValueError(f"png decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "jpeg":
-        from . import jpeg as _jpeg
-
-        arr = _jpeg.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"jpeg decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "webp":
-        from . import vp8l as _vp8l
-
-        arr = _vp8l.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"webp decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "gif":
-        from . import gif as _gif
-
-        arr = _gif.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"gif decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "bmp":
-        from . import bmp as _bmp
-
-        arr = _bmp.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"bmp decodes to {arr.shape[:2]}, metadata says {(h, w)}")
-        return arr
-    if fmt == "ppm":
-        from . import netpbm as _netpbm
-
-        arr = _netpbm.decode(bytes(payload))
-        if arr.shape[:2] != (h, w):
-            raise ValueError(f"ppm decodes to {arr.shape[:2]}, metadata says {(h, w)}")
+            raise ValueError(f"{fmt} decodes to {arr.shape[:2]}, metadata says {(h, w)}")
         return arr
     if fmt not in ("raw", "q8"):
-        raise ValueError(f"unknown fmt: {fmt}")
+        raise _unknown_fmt(fmt)
     arr = np.frombuffer(payload, dtype=np.uint8)
     expected = h * w * CHANNELS
     if arr.size != expected:

@@ -17,8 +17,8 @@ operator renders that layout from a sink in one distributed pass:
 2. **Map-side encode + write**: each group assembles (h, w, 3) from
    its band planes, encodes with the sink codec family
    (``codecs.encode_image``: raw / q8 / dct, plus the REAL bitstream
-   codecs — png / jpeg / webp-lossless — so a browser-facing web map
-   consumes the objects directly), and
+   codecs — png / jpeg / bmp — so a browser-facing web map consumes the
+   objects directly), and
    PUTS the object through ``pyarrow.fs`` resolved INSIDE the task
    (``file://``, ``s3://`` — the sources/fs.py dispatch).  A tile
    file's content is a pure function of the sink row, so task retries
@@ -50,16 +50,8 @@ _EXPORT_SCHEMA = T.StructType(
     ]
 )
 
-_FMT_EXT = {
-    "raw": "raw",
-    "q8": "q8",
-    "dct": "dct",
-    # real bitstream codecs (r7 PNG/JPEG, r8 lossless WebP) — what an
-    # actual web map consumes straight off the object store
-    "png": "png",
-    "jpeg": "jpg",
-    "webp": "webp",
-}
+# every codec format is exportable; only the file extension differs
+_FMT_EXT = {fmt: "jpg" if fmt == "jpeg" else fmt for fmt in codecs.FORMATS}
 
 
 def export_xyz(

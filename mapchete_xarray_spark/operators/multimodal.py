@@ -15,24 +15,20 @@ Real in this sandbox (numpy-only):
 - ``decode_external(fmt='jpeg')``: REAL baseline JFIF decode (pure
   numpy Huffman + vectorized IDCT, jpeg.py), cross-checked against
   the JVM ImageIO decoder via Spark's image datasource.
+- ``decode_external(fmt='bmp')``: REAL Windows DIB decode (bmp.py).
 - ``sample_video_frames`` + ``decode_external(fmt='mjpeg')`` (r8):
   REAL video frame sampling for MJPEG-in-AVI payloads — avi.py walks
   the RIFF container (pure struct), each frame chunk is a standalone
   baseline JPEG jpeg.decode handles; every-Nth / evenly-spaced /
   timestamp sampling, decode cost per sampled frame only.
 
-- ``decode_external(fmt='webp')`` / ``(fmt='gif')`` (r8): REAL
-  lossless-WebP (vp8l.py) and GIF (gif.py) bitstream decodes;
-  ``sample_video_frames`` sniffs the container and also samples
-  animated WebP and animated GIF with spec compositing.
-
 STUBBED (libs not in container; the Spark-side plumbing — schema,
 batch shape, partitioning — is real and tested):
-- Lossy VP8 inside WebP: needs a real codec library (RFC 6386's
-  probability/dequant tables are not reproducible here); raises
-  NotImplementedError naming it.  Likewise inter-frame video codecs
-  (h264/VP9/…) inside AVI refuse with the fourcc — only MJPG
-  streams decode without ffmpeg.
+- Any fmt outside ``codecs.BITSTREAM_DECODERS`` and ``mjpeg``:
+  ``decode_external`` raises NotImplementedError naming the supported
+  set.  Likewise inter-frame video codecs (h264/VP9/…)
+  inside AVI refuse with the fourcc — only MJPG streams decode
+  without ffmpeg.
 """
 
 from __future__ import annotations
@@ -258,30 +254,32 @@ def augment_images(
 def decode_external(images: DataFrame, fmt: str) -> DataFrame:
     """Bitstream decode of externally-produced image payloads.
 
-    ``fmt='png'`` (round 7) and ``fmt='jpeg'`` (round 7) are REAL —
-    pure numpy+stdlib decoders (codecs._png_decode_bytes: chunk CRCs,
-    all five scanline filters, grey/RGB/RGBA 8-bit; jpeg.decode:
-    baseline SOF0/1 Huffman + IDCT, 4:4:4/4:2:2/4:2:0, restart
-    markers — verified against the JVM's ImageIO decoder through
-    Spark's image datasource in tests/test_jpeg.py).  Output rows
-    carry the decoded pixels as ``fmt='raw'`` so every downstream
-    operator (decode_stats, resize, augment) consumes them unchanged.
-    ``fmt='mjpeg'`` (round 8) decodes the FIRST frame of an
-    MJPEG-in-AVI container (full sampling: ``sample_video_frames``).
-    ``fmt='webp'`` (round 8) decodes lossless WebP (VP8L — prefix
-    codes, LZ77, color cache, all four transforms; vp8l.py, verified
-    against a real libwebp-encoded stream); lossy VP8 stays honestly
-    refused — its boolean arithmetic decoder + intra prediction +
-    loop filter genuinely need a codec library."""
-    if fmt not in ("png", "jpeg", "mjpeg", "webp", "gif", "bmp", "ppm"):
+    The bitstream formats are exactly ``codecs.BITSTREAM_DECODERS``
+    (``png``: chunk CRCs, all five scanline filters, Adam7, grey/RGB/
+    RGBA 8-bit; ``jpeg``: baseline + progressive Huffman + IDCT,
+    4:4:4/4:2:2/4:2:0, restart markers — verified against the JVM's
+    ImageIO decoder through Spark's image datasource in
+    tests/test_jpeg.py; ``bmp``: palettized/16/24/32 bpp, BITFIELDS,
+    RLE4/RLE8).  ``fmt='mjpeg'`` decodes the FIRST frame of
+    an MJPEG-in-AVI container (full sampling: ``sample_video_frames``).
+    Output rows carry the decoded pixels as ``fmt='raw'`` so every
+    downstream operator (decode_stats, resize, augment) consumes them
+    unchanged."""
+    if fmt == "mjpeg":
+        from .. import avi as _avi
+
+        def decode_one(payload: bytes):
+            return next(_avi.frames(payload, [0]))[1]
+    elif fmt in codecs.BITSTREAM_DECODERS:
+        decode_one = codecs.BITSTREAM_DECODERS[fmt]
+    else:
         raise NotImplementedError(
             f"decoding fmt={fmt!r} requires an image codec library "
             "(libvips/ffmpeg), none of which exist in this sandbox; "
-            "supported here: 'png', 'jpeg', 'webp' (lossless/VP8L), "
-            "'gif', 'bmp', 'ppm' (netpbm P1-P6) and 'mjpeg' (first "
-            "frame of an MJPEG-in-AVI container) — pure numpy+stdlib "
-            "bitstream decoders — plus 'raw'/'q8'/'dct' via "
-            "codecs.decode_image"
+            f"supported here: {', '.join(map(repr, codecs.BITSTREAM_DECODERS))} "
+            "and 'mjpeg' (first frame of an MJPEG-in-AVI container) — "
+            "pure numpy+stdlib bitstream decoders — plus 'raw'/'q8'/'dct' "
+            "via codecs.decode_image"
         )
     out_schema = T.StructType(
         [
@@ -292,34 +290,6 @@ def decode_external(images: DataFrame, fmt: str) -> DataFrame:
             T.StructField("fmt", T.StringType(), False),
         ]
     )
-
-    if fmt == "png":
-        decode_one = codecs._png_decode_bytes
-    elif fmt == "mjpeg":
-        from .. import avi as _avi
-
-        def decode_one(payload: bytes):
-            return next(_avi.frames(payload, [0]))[1]
-    elif fmt == "webp":
-        from .. import vp8l as _vp8l
-
-        decode_one = _vp8l.decode
-    elif fmt == "gif":
-        from .. import gif as _gif
-
-        decode_one = _gif.decode
-    elif fmt == "bmp":
-        from .. import bmp as _bmp
-
-        decode_one = _bmp.decode
-    elif fmt == "ppm":
-        from .. import netpbm as _netpbm
-
-        decode_one = _netpbm.decode
-    else:
-        from .. import jpeg
-
-        decode_one = jpeg.decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -361,17 +331,11 @@ def sample_video_frames(
     library needed.  Sampling: ``every=N`` takes every Nth frame;
     default takes ``n_frames`` evenly spaced across the video.  Output
     rows carry decoded RGB as fmt='raw' (downstream decode_stats /
-    resize / phash consume them unchanged).  Non-MJPG codecs refuse
-    loudly inside the batch (avi.parse_avi).  Animated WebP payloads
-    (RIFF fourcc 'WEBP', VP8L-coded frames) route through
-    ``vp8l.anim_frames`` with the container's blend/dispose
-    compositing — same sampling semantics, timestamps from the
-    cumulative frame durations.  1→n fan-out inside Arrow batches;
-    decode cost is per SAMPLED frame only (animated WebP decodes up
-    to the largest sampled index: compositing state is cumulative)."""
+    resize / phash consume them unchanged).  Non-MJPG codecs and
+    non-AVI payloads refuse loudly inside the batch (avi.parse_avi).
+    1→n fan-out inside Arrow batches; decode cost is per SAMPLED frame
+    only."""
     from .. import avi as _avi
-    from .. import gif as _gif
-    from .. import vp8l as _vp8l
 
     def _sample_idxs(n_total: int) -> list[int]:
         if every is not None:
@@ -389,23 +353,7 @@ def sample_video_frames(
             rows = []
             for r in b.itertuples():
                 payload = bytes(getattr(r, bytes_col))
-                if payload[:6] in (b"GIF87a", b"GIF89a"):
-                    n_total = _gif.gif_info(payload)["n_frames"]
-                    sampled = [
-                        (i, round(t_ms / 1000.0, 6), rgb)
-                        for i, t_ms, rgb in _gif.gif_frames(
-                            payload, _sample_idxs(n_total)
-                        )
-                    ]
-                elif payload[8:12] == b"WEBP":
-                    n_total = _vp8l.anim_info(payload)["n_frames"]
-                    sampled = [
-                        (i, round(t_ms / 1000.0, 6), rgb)
-                        for i, t_ms, rgb in _vp8l.anim_frames(
-                            payload, _sample_idxs(n_total)
-                        )
-                    ]
-                elif every is not None:
+                if every is not None:
                     sampled = _avi.frame_sample(payload, every=every)
                 else:
                     info = _avi.parse_avi(payload)

@@ -177,7 +177,12 @@ def overview_level(
     )
 
 
-def _pruned_base_read(spark, base_td, ov_chunks, ct: int, max_keys: int = 10_000):
+# driver-pull cap shared by the refresh paths: past it an incremental
+# refresh is a full rebuild
+_MAX_KEYS = 10_000
+
+
+def _pruned_base_read(spark, base_td, ov_chunks, ct: int, max_keys: int = _MAX_KEYS):
     """Base-level read restricted to the children of the given
     overview chunks, as a (chunk_row, chunk_col) IN-list on the BASE
     sink's PARTITION columns — the filter Catalyst can turn into
@@ -241,8 +246,8 @@ def refresh_overviews(
     # columns — without it the broadcast join on derived columns
     # cannot prune and every refresh scans the whole base level's
     # payload bytes (the O(k) claim would be false at the design
-    # point).  Past ~10k touched chunks the IN-list stops paying and
-    # a full-scan refresh is the honest plan anyway.
+    # point).  The pull is capped at _MAX_KEYS chunks: past it the
+    # change is a full rebuild, not a refresh, and the call refuses.
     ov_chunks = [
         (int(r._cr), int(r._cc))
         for r in changed_tiles.selectExpr(
@@ -250,8 +255,16 @@ def refresh_overviews(
             f"(tile_col div 2) div {ct} as _cc",
         )
         .distinct()
+        .limit(_MAX_KEYS + 1)
         .collect()
     ]
+    if len(ov_chunks) > _MAX_KEYS:
+        raise TileDirError(
+            f"refresh_overviews: the change set touches more than "
+            f"{_MAX_KEYS:,} overview chunks — that is a full rebuild, not "
+            f"an incremental refresh; run build_overviews over the whole "
+            f"base and write with mode='overwrite' instead"
+        )
     if not ov_chunks:
         return {"attempt_id": None, "chunks": 0, "tiles": 0}
     base = _pruned_base_read(spark, base_td, ov_chunks, ct).drop(

@@ -17,6 +17,7 @@ in Spark and SQL; ints → bigint, measures → double.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,13 +56,33 @@ def register(name: str, oracle=None):
     return deco
 
 
+class FixtureAbsent(FileNotFoundError):
+    """A query (or its oracle) reads a committed input fixture that is
+    not present on this host.  Raised by that query alone, so callers
+    can skip it and keep running the rest of the registry."""
+
+    def __init__(self, path: str):
+        super().__init__(f"fixture absent: {path}")
+        self.path = path
+
+
+def _require_fixture(path: str) -> None:
+    if not os.path.exists(path):
+        raise FixtureAbsent(path)
+
+
+def resolve_oracle(name: str) -> str:
+    """One query's oracle SQL text (driver-facing or overflow); a lazy
+    generator is invoked on first use and its result cached."""
+    table = ORACLES if name in ORACLES else EXTRA_ORACLES
+    if callable(table[name]):
+        table[name] = table[name]()
+    return table[name]
+
+
 def resolve_oracles() -> dict[str, str]:
-    """Materialize every driver-facing oracle to its SQL text (invokes
-    the lazy generators once and caches the result)."""
-    for k, v in list(ORACLES.items()):
-        if callable(v):
-            ORACLES[k] = v()
-    return dict(ORACLES)
+    """Materialize every driver-facing oracle to its SQL text."""
+    return {k: resolve_oracle(k) for k in ORACLES}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -72,12 +93,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def resolve_all_oracles() -> dict[str, str]:
-    out = resolve_oracles()
-    for k, v in list(EXTRA_ORACLES.items()):
-        if callable(v):
-            EXTRA_ORACLES[k] = v()
-    out.update(EXTRA_ORACLES)
-    return out
+    return {k: resolve_oracle(k) for k in [*ORACLES, *EXTRA_ORACLES]}
 
 
 def _finalize_registry(demote: list[str], hoist: list[str], after: str) -> None:
@@ -973,14 +989,6 @@ def cell_kring_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _docs_sql_query(gen, **kw):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-        return spark.sql(gen("spark", **kw))
-
-    return fn
-
-
-def _emb_sql_query(gen, **kw):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _t(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
         return spark.sql(gen("spark", **kw))
 
     return fn
@@ -2479,6 +2487,7 @@ def s2_stack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.warp import TileWarper
     from . import tiff as _tiff
 
+    _require_fixture(_S2_DIR)
     tiles = _s2_tiles()
     dates = {d: i for i, d in enumerate(_S2_DATES)}
     schema = (
@@ -2530,6 +2539,7 @@ def _s2_stack_oracle() -> str:
     the hash compare requires every crc32 to agree."""
     from . import zarrio
 
+    _require_fixture(_S2_GOLDEN)
     rows = []
     (trow, tcol, _bounds) = _s2_tiles()[0]
     for band in (1, 2, 3):

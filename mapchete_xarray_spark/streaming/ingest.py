@@ -16,11 +16,10 @@ check plumbing (watermark, window, availableNow termination).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import portable
 from ..functions.tiling import with_tile_columns
 
 # per-batch stage timings appended by the tile-maintenance foreachBatch
@@ -29,21 +28,6 @@ from ..functions.tiling import with_tile_columns
 # use by the caller (it is plain observability, never consulted by the
 # pipeline itself).
 STAGE_LOG: list[dict] = []
-
-
-def rate_points(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Unbounded deterministic point stream: the rate source's value
-    column feeds the same synth formulas as the batch fixtures."""
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return (
-        src.withColumnRenamed("value", "key")
-        .withColumn("lon", F.expr(portable.synth_lon_sql("key")))
-        .withColumn("lat", F.expr(portable.synth_lat_sql("key")))
-    )
 
 
 def streaming_tile_counts(
@@ -68,12 +52,6 @@ def streaming_tile_counts(
             "n_images",
         )
     )
-
-
-def file_ingest_points(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-source variant (parquet drop-folder → stream), the shape a
-    real feed (S3 notifications / Iceberg incremental scan) plugs into."""
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def streaming_first_seen(

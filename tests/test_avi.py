@@ -118,19 +118,3 @@ class TestSparkVideo:
         _, want = next(avi.frames(buf, [0]))
         got = np.frombuffer(bytes(out.iloc[0].bytes), np.uint8).reshape(48, 64, 3)
         np.testing.assert_array_equal(got, want)
-
-    def test_lossy_webp_still_refused(self, spark):
-        # lossless WebP (VP8L) became real in round 8 (vp8l.py, see
-        # tests/test_vp8l.py); a LOSSY VP8 payload must still fail
-        # loudly inside the batch
-        from mapchete_xarray_spark.operators.multimodal import decode_external
-
-        lossy = open(
-            os.path.join(os.path.dirname(__file__), "data", "python_16x16.webp"),
-            "rb",
-        ).read()
-        imgs = spark.createDataFrame(
-            [("w0", bytearray(lossy))], "image_id string, bytes binary"
-        )
-        with pytest.raises(Exception, match="lossy VP8"):
-            decode_external(imgs, "webp").collect()

@@ -211,9 +211,12 @@ class TestCodecs:
             decode_image(payload, 16, 8, "dct")
 
     def test_bad_fmt_raises(self):
-        # webp/gif/bmp became real codecs in round 8 — exr stays unknown
-        with pytest.raises(ValueError):
-            encode_image(self._img(), "exr")
+        # formats outside codecs.FORMATS are refused, naming the set
+        for fmt in ("exr", "webp", "gif", "ppm"):
+            with pytest.raises(ValueError, match="supported: raw, q8, dct, png, jpeg, bmp"):
+                encode_image(self._img(), fmt)
+            with pytest.raises(ValueError, match="supported: raw, q8, dct, png, jpeg, bmp"):
+                decode_image(b"\x00" * 12, 2, 2, fmt)
         with pytest.raises(ValueError):
             decode_image(b"\x00" * 12, 2, 2, "png")
 

@@ -138,8 +138,9 @@ class TestExportXYZ:
 
     def test_gates(self, spark, tmp_path):
         td = _sink(spark, tmp_path)
-        with pytest.raises(ValueError, match="unknown export fmt"):
-            export_xyz(spark, td, str(tmp_path / "x"), fmt="gif")
+        for fmt in ("gif", "webp", "ppm"):
+            with pytest.raises(ValueError, match="unknown export fmt"):
+                export_xyz(spark, td, str(tmp_path / "x"), fmt=fmt)
         with pytest.raises(ValueError, match="band_order"):
             export_xyz(spark, td, str(tmp_path / "x"), band_order=[0, 1])
         with pytest.raises(ValueError, match="out of range"):
@@ -272,11 +273,13 @@ class TestExportXYZ:
 
 
 class TestBitstreamFormats:
-    """r8: the exporter serves real bitstream tiles (png/webp
+    """r8: the exporter serves real bitstream tiles (png/bmp
     lossless, jpeg lossy) — what a browser-facing web map actually
     consumes.  Lossless formats must round-trip pixel-exact."""
 
     def test_png_and_webp_lossless_roundtrip(self, spark, tmp_path):
+        # the webp leg went with the WebP codec (export now refuses
+        # webp, see test_gates); bmp is the other lossless bitstream
         td = _sink(spark, tmp_path)
         planes = {
             (r.tile_row, r.tile_col, r.band): np.frombuffer(
@@ -284,14 +287,14 @@ class TestBitstreamFormats:
             ).reshape(TPX, TPX)
             for r in td.read(spark).collect()
         }
-        for fmt, ext in (("png", "png"), ("webp", "webp")):
+        for fmt in ("png", "bmp"):
             out = str(tmp_path / f"cache_{fmt}")
             stats = export_xyz(spark, td, out, fmt=fmt)
             assert stats["tiles"] == 6
             import os
 
             assert sorted(os.listdir(os.path.join(out, str(ZOOM), "3")))[0] \
-                == f"2.{ext}"
+                == f"2.{fmt}"
             for tr in range(2, 4):
                 for tc in range(3, 6):
                     img = read_xyz_tile(out, tr, tc)

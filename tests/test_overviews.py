@@ -616,6 +616,39 @@ class TestPrunedReadGate:
             (r.tile_row, r.tile_col) for r in full.collect()
         } == {(2, 2)}
 
+    def test_refresh_caps_touched_chunks(self, spark, tmp_path, monkeypatch):
+        """The touched-chunk pull is capped like every other refresh
+        path: 10,001 distinct overview chunks raise TileDirError
+        before any sink is read."""
+        from mapchete_xarray_spark.operators.overviews import refresh_overviews
+        from mapchete_xarray_spark.sources.tiledir import (
+            TileDirConfig,
+            TileDirectory,
+            TileDirError,
+        )
+
+        base_td = TileDirectory(
+            TileDirConfig(path=str(tmp_path / "b"), zoom=14, bands=1,
+                          tile_size=N, chunk_tiles=1)
+        )
+        ov_td = TileDirectory(
+            TileDirConfig(path=str(tmp_path / "o"), zoom=13, bands=1,
+                          tile_size=N, chunk_tiles=1)
+        )
+
+        def no_read(*a, **k):
+            raise AssertionError("sink read before the cap")
+
+        monkeypatch.setattr(base_td, "read", no_read)
+        monkeypatch.setattr(ov_td, "read", no_read)
+        # overview chunk = ((row div 2) div 1, (col div 2) div 1):
+        # col = 2·id gives one distinct chunk per id
+        changed = spark.range(10_001).selectExpr(
+            "0L as tile_row", "id * 2 as tile_col"
+        )
+        with pytest.raises(TileDirError, match="more than 10,000 overview chunks"):
+            refresh_overviews(spark, base_td, ov_td, changed)
+
 
 @pytest.mark.spark
 class TestPyramidCascade:

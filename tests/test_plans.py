@@ -28,14 +28,20 @@ class TestPlanShapes:
     BNLJ_ALLOWED = {"ann_topk_lsh", "keyword_topk_tfidf", "ann_topk_cosine"}
 
     def test_no_nested_loop_join_anywhere(self, spark, sf_dir):
-        offenders = []
+        offenders, absent = [], []
         for name, fn in _q.all_queries().items():
             if name in self.BNLJ_ALLOWED:
                 continue
-            plan = _plan(fn(spark, sf_dir))
+            try:
+                plan = _plan(fn(spark, sf_dir))
+            except _q.FixtureAbsent as e:
+                absent.append(str(e))
+                continue
             if "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan:
                 offenders.append(name)
         assert not offenders, f"O(n*m) joins in: {offenders}"
+        if absent:
+            pytest.skip("; ".join(absent))
 
     def test_cosine_refine_is_mapside_array_fold(self, spark, sf_dir):
         """The ANN candidate refines must be the zip_with+aggregate

@@ -276,12 +276,14 @@ class TestSparkPaths:
         )
 
     def test_decode_external_unknown_fmt_still_stubbed(self, spark):
-        # webp/gif/bmp became real in round 8; formats
-        # with no pure-python path keep the honest refusal
+        # formats with no pure-python path keep the honest refusal,
+        # which names the supported set
         from mapchete_xarray_spark.operators.multimodal import decode_external
 
-        with pytest.raises(NotImplementedError, match="exr"):
-            decode_external(spark.range(1), "exr")
+        for fmt in ("exr", "webp", "gif", "ppm"):
+            with pytest.raises(NotImplementedError, match=fmt) as e:
+                decode_external(spark.range(1), fmt)
+            assert "supported here: 'png', 'jpeg', 'bmp' and 'mjpeg'" in str(e.value)
 
     def test_decode_stats_accepts_png(self, spark):
         """End-to-end: PNG payload rows flow through the same
